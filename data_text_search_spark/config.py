@@ -25,7 +25,6 @@ class BM25Config:
     # physical-index knobs (engine-only; no reference analog — the
     # reference keeps the whole index as one in-RAM dict)
     block_size: int = 128          # postings per compressed block
-    term_partitions: int = 32      # hash-partition count of the term dictionary
     # posting payload codec:
     # - "f64": exact per-posting impact scores, 8 B each (default)
     # - "compact": store doc_len varints instead; the query kernel

@@ -1,6 +1,6 @@
 """Query executor over the physical index: block-max dynamic pruning.
 
-Document-partitioned, shuffle-free execution (layout v2): each task
+Document-partitioned, shuffle-free execution: each task
 reads its OWN colocation units' posting files (pyarrow, term-IN
 row-group pruning) and scores them in place; only per-task top-k rows
 leave the task, merged by a driver scatter-gather (or a hash aggregate
@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 from data_text_search_spark.config import IndexPaths
 from data_text_search_spark.functions.text import tokenize_py
 from data_text_search_spark.operators.index_build import (
+    POSTINGS_SCHEMA,
     committed_doc_stats_paths,
     committed_postings_dirs,
     committed_term_stats_paths,
@@ -295,8 +296,8 @@ def _read_unit(pds, unit: str, columns: list[str], flt):
     missing directory means a concurrent merge_tier/merge_segments (or a
     manual wipe) replaced the index under this open searcher. Silently
     skipping it would return results missing that unit's entire corpus
-    slice — fail loudly instead, like the v1 executor's Spark scan does
-    in the same race."""
+    slice — fail loudly instead, like a Spark parquet scan does in the
+    same race."""
     try:
         dset = pds.dataset(unit, format="parquet")
     except FileNotFoundError as e:
@@ -755,39 +756,36 @@ class IndexSearcher:
                 f"{m.get('tokenizer')!r}, this engine tokenizes with "
                 f"{TOKEN_PATTERN!r}; rebuild the index")
         self.manifest = m
-        # colocation units of the shuffle-free kernel stage (layout v2):
-        # every spart= dir under each committed postings dir — a unit is a
-        # whole set of sub-shards' postings across all term buckets, so any
-        # grouping of whole units is a valid partial top-k task. None →
-        # layout v1 index → the repartition("shard") fallback executor.
-        self._units: list[str] | None = None
-        if m.get("subshards"):
-            from data_text_search_spark.sources import fsio
-            units = []
-            for d in committed_postings_dirs(root, m):
-                units.extend(f"{d}/{name}" for name in fsio.listdir(d, spark)
-                             if name.startswith("spart="))
-            self._units = units or None
+        # colocation units of the shuffle-free kernel stage: every spart=
+        # dir under each committed postings dir — a unit is a whole set
+        # of sub-shards' postings for every term, so any grouping of
+        # whole units is a valid partial top-k task. Empty when every
+        # term is alpha-pruned or a stopword (no posting was encoded).
+        from data_text_search_spark.sources import fsio
+        self._units: list[str] = [
+            f"{d}/{name}" for d in committed_postings_dirs(root, m)
+            for name in fsio.listdir(d, spark) if name.startswith("spart=")]
         # enumerate committed directories from the manifest (never glob the
         # root: a crashed incremental append can leave fully-written but
-        # uncommitted segment dirs that must stay invisible)
-        self.postings = spark.read.option("basePath", self.paths.postings) \
-            .parquet(*committed_postings_dirs(root, m))
-        self.term_stats = spark.read.parquet(*committed_term_stats_paths(root, m))
+        # uncommitted segment dirs that must stay invisible); the explicit
+        # schema also opens a postings dir that holds no unit at all
+        self.postings = (spark.read.schema(POSTINGS_SCHEMA + ", spart int")
+                         .option("basePath", self.paths.postings)
+                         .parquet(*committed_postings_dirs(root, m)))
         # unfiltered dictionary (alpha-pruned terms INCLUDED): fuzzy_search
         # must match against every term the corpus contains — a pruned hot
         # term still counts for the reference's fuzzy semantics
-        self._term_stats_all = self.term_stats
-        if "pruned" in self.term_stats.columns:
-            # alpha-cutoff terms are flagged, not deleted (kept for
-            # incremental stats); queries must not see them
-            self.term_stats = self.term_stats.filter(~F.col("pruned"))
-        cfg = m.get("config", {})
-        self.codec = cfg.get("impact_codec", "f64")
-        self.k1 = cfg.get("k1", 1.5)
-        self.b = cfg.get("b", 0.75)
-        self.avgdl = m.get("avgdl", 1.0)
-        self.n_docs = int(m.get("n_docs", 0))
+        self._term_stats_all = spark.read.parquet(
+            *committed_term_stats_paths(root, m))
+        # alpha-cutoff terms are flagged, not deleted (kept for
+        # incremental stats); queries must not see them
+        self.term_stats = self._term_stats_all.filter(~F.col("pruned"))
+        cfg = m["config"]
+        self.codec = cfg["impact_codec"]
+        self.k1 = cfg["k1"]
+        self.b = cfg["b"]
+        self.avgdl = m["avgdl"]
+        self.n_docs = int(m["n_docs"])
         # tombstones (delete_documents): sorted int64 array of deleted
         # doc_ids, masked at posting-decode time in every kernel. Driver
         # RAM cost is 8 B/id (Lucene holds the analogous live-docs bitset
@@ -809,7 +807,8 @@ class IndexSearcher:
                 self._tomb_handle = (
                     spark.sparkContext.broadcast(arr) if arr.size > 1_000_000
                     else arr)
-        self._term_map: dict[str, tuple[int, float, int]] | None = None
+        # live query dictionary: term -> (idf, df, cf); see warm()
+        self._term_map: dict[str, tuple[float, int, int]] | None = None
         # lazy federation dictionary (term_meta): includes pruned terms
         self._meta_map: dict | None | bool = None
         # code-point-sorted _meta_map keys (prefix bisect); lazy
@@ -832,64 +831,54 @@ class IndexSearcher:
             self.term_stats = self.term_stats.cache()
 
     def warm(self) -> None:
-        """Materialize caches (bench calls this before timing)."""
-        n = self.term_stats.count()
-        if n <= self.DRIVER_TERM_CACHE_MAX and self._term_map is None:
-            has_cf = "cf" in self.term_stats.columns
-            has_pruned = "pruned" in self._term_stats_all.columns
-            cols = ["term", "term_bucket", "idf", "df"] + (
-                ["cf"] if has_cf else []) + (
-                ["pruned"] if has_pruned else [])
-            # ONE collect over the unfiltered dictionary feeds BOTH maps:
-            # the live query dictionary (_term_map — membership means the
-            # term scores) and the pruned-INCLUDED federation/clause
-            # dictionary (_meta_map), so boolean/msm/query_string clause
-            # gating and per-member term_meta stop paying a filtered
-            # collect per call (alpha-pruned rows are a tiny tail, so the
-            # widened collect costs what the old live-only one did)
-            rows = self._term_stats_all.select(*cols).collect()
-            self._term_map = {
-                r["term"]: (r["term_bucket"], r["idf"], r["df"],
-                            (int(r["cf"]) if has_cf
-                             and r["cf"] is not None else None))
-                for r in rows
-                if not (has_pruned and r["pruned"])
-            }
-            if self._meta_map is None:
-                self._meta_map = {
-                    r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"]) if has_pruned else False,
-                                int(r["term_bucket"]))
-                    for r in rows}
+        """Collect the driver dictionaries (bench calls this before
+        timing) when the FULL dictionary — the frame actually collected,
+        alpha-pruned rows included — fits DRIVER_TERM_CACHE_MAX, the
+        same budget term_meta() applies. Above it both stay distributed
+        and only the cached live term_stats is materialized."""
+        if self._term_map is not None:
+            return
+        if self._term_stats_all.count() > self.DRIVER_TERM_CACHE_MAX:
+            self.term_stats.count()
+            return
+        # ONE collect over the unfiltered dictionary feeds BOTH maps:
+        # the live query dictionary (_term_map — membership means the
+        # term scores) and the pruned-INCLUDED federation/clause
+        # dictionary (_meta_map), so boolean/msm/query_string clause
+        # gating and per-member term_meta stop paying a filtered
+        # collect per call
+        rows = self._term_stats_all.select(
+            "term", "idf", "df", "cf", "pruned").collect()
+        self._term_map = {
+            r["term"]: (r["idf"], r["df"], int(r["cf"]))
+            for r in rows if not r["pruned"]}
+        if self._meta_map is None:
+            self._meta_map = {
+                r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]))
+                for r in rows}
 
-    def term_meta(self, terms) -> dict[str, tuple[int, float, bool, int]]:
-        """(df, local idf, pruned, term_bucket) for the given terms present
-        in this index's dictionary INCLUDING alpha-pruned entries (their
-        true df still counts toward federated global df) — the per-member
+    def term_meta(self, terms) -> dict[str, tuple[int, float, bool]]:
+        """(df, local idf, pruned) for the given terms present in this
+        index's dictionary INCLUDING alpha-pruned entries (their true df
+        still counts toward federated global df) — the per-member
         statistics operators/federation.py combines. Served from a lazily
         collected driver map when the vocabulary fits (same budget as
         warm()), else one vocabulary-directed filtered collect."""
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:    # legacy pre-alpha-flag layout
-            ts = ts.withColumn("pruned", F.lit(False))
+        ts = self._term_stats_all.select("term", "df", "idf", "pruned")
         if self._meta_map is None:
             if ts.count() <= self.DRIVER_TERM_CACHE_MAX:
                 self._meta_map = {
                     r["term"]: (int(r["df"]), float(r["idf"]),
-                                bool(r["pruned"]), int(r["term_bucket"]))
-                    for r in ts.select(
-                        "term", "df", "idf", "pruned",
-                        "term_bucket").collect()}
+                                bool(r["pruned"]))
+                    for r in ts.collect()}
             else:
                 self._meta_map = False  # too large: stay distributed
         if self._meta_map:
             return {t: self._meta_map[t] for t in terms
                     if t in self._meta_map}
-        rows = (ts.filter(F.col("term").isin(list(terms)))
-                .select("term", "df", "idf", "pruned",
-                        "term_bucket").collect())
-        return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]),
-                            int(r["term_bucket"])) for r in rows}
+        rows = ts.filter(F.col("term").isin(list(terms))).collect()
+        return {r["term"]: (int(r["df"]), float(r["idf"]), bool(r["pruned"]))
+                for r in rows}
 
     def _pruned_flags(self, terms) -> dict[str, bool]:
         """term -> alpha-pruned flag for the given terms PRESENT in the
@@ -904,11 +893,8 @@ class IndexSearcher:
         if isinstance(self._meta_map, dict):
             return {t: self._meta_map[t][2] for t in terms
                     if t in self._meta_map}
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
         return {r["term"]: bool(r["pruned"]) for r in
-                ts.filter(F.col("term").isin(terms))
+                self._term_stats_all.filter(F.col("term").isin(terms))
                 .select("term", "pruned").collect()}
 
     def _prefix_matches(self, prefix: str, cap: int) -> "list[str] | None":
@@ -934,18 +920,6 @@ class IndexSearcher:
             i += 1
         return out
 
-    def _kernel_parts(self) -> int:
-        """Partition count for the per-shard kernel stage: the default
-        spark.sql.shuffle.partitions (≈ cores) puts many shards into few
-        tasks, and at full parallelism ONE skewed task gates the stage
-        (at low parallelism waves average the skew out — a pure
-        scaling-efficiency loss). ~4 tasks per core restores wave
-        averaging; never more than one task per shard."""
-        spark = self.spark
-        base = max(4 * spark.sparkContext.defaultParallelism,
-                   int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
-        return int(min(self.manifest["shards"], base))
-
     def refresh(self) -> None:
         """Re-list index files — pick up segments appended (and
         tombstones committed) since this searcher opened (Spark
@@ -958,7 +932,7 @@ class IndexSearcher:
     def _colocated_run(self, terms: list[str], kernel,
                        columns: list[str], schema: str,
                        tasks_per_core: int = 1) -> DataFrame:
-        """Shuffle-free kernel stage (layout v2): one task per group of
+        """Shuffle-free kernel stage: one task per group of
         whole colocation units; each task reads ITS OWN units' posting
         files directly (pyarrow dataset: term-IN row-group statistics
         pruning on the term-sorted files, column-pruned to `columns`)
@@ -978,9 +952,14 @@ class IndexSearcher:
         the merge input. Doc-hash sharding keeps units balanced (max/
         mean recorded in the build manifest), which is what wave
         averaging would otherwise buy; raise it on clusters with genuine
-        straggler variance."""
+        straggler variance.
+
+        An index without units (every term alpha-pruned or a stopword)
+        runs no job: the typed empty frame comes back directly."""
         spark = self.spark
         units = self._units
+        if not units:
+            return spark.createDataFrame([], schema)
         T = int(min(len(units),
                     max(tasks_per_core * spark.sparkContext.defaultParallelism,
                         1)))
@@ -1071,7 +1050,7 @@ class IndexSearcher:
         offs = np.asarray(offs_l, dtype=np.int64)
         dfs = np.zeros(max(len(tid), 1), dtype=np.float64)
         for t, i in tid.items():
-            dfs[i] = self._term_map[t][2]
+            dfs[i] = self._term_map[t][1]
         sig_df = (np.add.reduceat(dfs[flat], offs[:-1])
                   if flat.size else np.zeros(Q))
         # per-sig cost estimate → WEIGHTED contiguous chunking: groups
@@ -1112,7 +1091,7 @@ class IndexSearcher:
     def _colocated_batch_grid(self, qterms: dict[int, dict[str, int]],
                               kernel, schema: str,
                               k: int = 10) -> tuple[DataFrame, int]:
-        """Grid executor for search_batch over layout v2: task (qi, di)
+        """Grid executor for search_batch: task (qi, di)
         reads ONLY its query group's terms over ONLY its unit slice
         (pyarrow, term-IN row-group pruned) and scores that group in
         place. Returns (per-task partial top-k frame, Td) — each query's
@@ -1120,6 +1099,8 @@ class IndexSearcher:
         Q·Td·k rows (≤ the 1-D executor's Q·cores·k)."""
         spark = self.spark
         units = self._units
+        if not units:
+            return spark.createDataFrame([], schema), 0
         Tq, Td, groups = self._batch_grid(qterms, len(units), k)
         gterms = [sorted({t for qid in g for t in qterms[qid]})
                   for g in groups]
@@ -1209,27 +1190,13 @@ class IndexSearcher:
         uniq_strs, inv_str = np.unique(np.asarray(queries, dtype=object),
                                        return_inverse=True)
         tokenized = [dict(Counter(tokenize_py(q))) for q in uniq_strs]
-        all_terms = sorted({t for c in tokenized for t in c})
-        empty = pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        if not all_terms:
-            return _merge_topn_driver(empty, n)
-        if self._term_map is not None:
-            term_set = {t for t in all_terms if t in self._term_map}
-            buckets = sorted({self._term_map[t][0] for t in term_set})
-            qidf = {t: self._term_map[t][1] for t in term_set}
-        else:
-            present = (self.term_stats.filter(F.col("term").isin(all_terms))
-                       .select("term", "term_bucket", "idf").collect())
-            term_set = {r["term"] for r in present}
-            buckets = sorted({r["term_bucket"] for r in present})
-            qidf = {r["term"]: r["idf"] for r in present}
+        _, qidf = self._terms_from_counts(
+            dict.fromkeys({t for c in tokenized for t in c}, 1))
         if idf_override is not None:
-            bucket_of = ({t: self._term_map[t][0] for t in term_set}
-                         if self._term_map is not None
-                         else {r["term"]: r["term_bucket"] for r in present})
-            term_set = {t for t in term_set if t in idf_override}
-            qidf = {t: float(idf_override[t]) for t in term_set}
-            buckets = sorted({bucket_of[t] for t in term_set})
+            qidf = {t: float(idf_override[t]) for t in qidf
+                    if t in idf_override}
+        term_set = set(qidf)
+        empty = pd.DataFrame(columns=["query_id", "doc_id", "score"])
         if not term_set:
             return _merge_topn_driver(empty, n)
         # distinct effective termsets → effective query ids
@@ -1266,17 +1233,8 @@ class IndexSearcher:
                                         else float(avgdl_override)),
                                        self.k1, self.b,
                                        tomb=self._tomb_handle, allow=allow)
-        kschema = "query_id int, doc_id long, score double"
-        if self._units is not None:
-            local, tasks = self._colocated_batch_grid(qterms, kernel,
-                                                      kschema, n)
-        else:
-            tasks = self._kernel_parts()
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(sorted(term_set)))
-            local = (blocks.repartition(tasks, "shard")
-                     .mapInPandas(_map_batches(kernel), schema=kschema))
+        local, tasks = self._colocated_batch_grid(
+            qterms, kernel, "query_id int, doc_id long, score double", n)
         if tasks * len(qterms) * n <= self.DRIVER_MERGE_MAX_ROWS:
             # the per-task tops are small (≤ tasks·distinct·n rows): fetch
             # them as ONE Arrow transfer and finish the top-n merge on the
@@ -1376,29 +1334,26 @@ class IndexSearcher:
                 .withColumn("score_abs", F.abs(F.round("score", 2))))
 
     def _query_terms(self, query: str) -> tuple[
-            dict[str, int], list[int], dict[str, float]]:
+            dict[str, int], dict[str, float]]:
         return self._terms_from_counts(Counter(tokenize_py(query)))
 
     def _terms_from_counts(self, counts) -> tuple[
-            dict[str, int], list[int], dict[str, float]]:
+            dict[str, int], dict[str, float]]:
         """Dictionary lookup for an explicit (term -> count) multiset —
         the shared tail of _query_terms, also the entry point for
-        expanded queries whose counts are synthesized, not tokenized."""
+        expanded queries whose counts are synthesized, not tokenized.
+        Returns (live query counts, live idf)."""
         if not counts:
-            return {}, [], {}
+            return {}, {}
         if self._term_map is not None:
             # driver-side dictionary (warm() collected it): zero Spark jobs
             qcounts = {t: c for t, c in counts.items() if t in self._term_map}
-            buckets = sorted({self._term_map[t][0] for t in qcounts})
-            qidf = {t: self._term_map[t][1] for t in qcounts}
-            return qcounts, buckets, qidf
+            return qcounts, {t: self._term_map[t][0] for t in qcounts}
         present = (self.term_stats
                    .filter(F.col("term").isin(list(counts)))
-                   .select("term", "term_bucket", "idf").collect())
-        qcounts = {r["term"]: counts[r["term"]] for r in present}
-        buckets = sorted({r["term_bucket"] for r in present})
-        qidf = {r["term"]: r["idf"] for r in present}
-        return qcounts, buckets, qidf
+                   .select("term", "idf").collect())
+        return ({r["term"]: counts[r["term"]] for r in present},
+                {r["term"]: r["idf"] for r in present})
 
     # filtered search: an allow set at or below this many ids is
     # collected to a sorted array and masked at decode time (the same
@@ -1424,7 +1379,7 @@ class IndexSearcher:
         """search() over an explicit (term -> count) multiset — the
         whole execution path behind search, also driven directly by
         search_expanded with synthesized counts."""
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         spark = self.spark
         empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
@@ -1443,27 +1398,18 @@ class IndexSearcher:
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle,
                                             allow=allow)
-        return self._topn_job(qcounts, buckets, kernel, n)
+        return self._topn_job(qcounts, kernel, n)
 
-    def _topn_job(self, qcounts, buckets, kernel, n: int,
+    def _topn_job(self, qcounts, kernel, n: int,
                   columns: list[str] = None) -> DataFrame:
-        """Shared execution tail of every single-query top-n kernel:
-        colocated shuffle-free stage (layout v2) or shard-repartitioned
-        fallback (v1), then the size-gated driver scatter-gather merge
-        (distributed hash-agg merge above DRIVER_MERGE_MAX_ROWS)."""
+        """Shared execution tail of every single-query top-n kernel: the
+        colocated shuffle-free stage, then the size-gated driver
+        scatter-gather merge (distributed hash-agg merge above
+        DRIVER_MERGE_MAX_ROWS)."""
         spark = self.spark
-        if self._units is not None:
-            tasks = min(len(self._units),
-                        spark.sparkContext.defaultParallelism)
-            local = self._colocated_run(sorted(qcounts), kernel,
-                                        columns or WAND_COLS, RESULT_SCHEMA)
-        else:
-            tasks = self._kernel_parts()
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = (blocks.repartition(tasks, "shard")
-                     .mapInPandas(_map_batches(kernel), schema=RESULT_SCHEMA))
+        tasks = min(len(self._units), spark.sparkContext.defaultParallelism)
+        local = self._colocated_run(sorted(qcounts), kernel,
+                                    columns or WAND_COLS, RESULT_SCHEMA)
         if tasks * n <= self.DRIVER_MERGE_MAX_ROWS:
             out = _merge_topn_driver(local.toPandas(), n)
             return spark.createDataFrame(
@@ -1484,7 +1430,7 @@ class IndexSearcher:
         warmed driver dictionary when present, else one filtered collect
         over term_stats (vocabulary-sized, never the corpus)."""
         if self._term_map is not None:
-            return {t: self._term_map[t][2] for t in terms}
+            return {t: self._term_map[t][1] for t in terms}
         rows = (self.term_stats.filter(F.col("term").isin(list(terms)))
                 .select("term", "df").collect())
         return {r["term"]: int(r["df"]) for r in rows}
@@ -1497,21 +1443,18 @@ class IndexSearcher:
         collect) — no posting decode at all. The query-time posting-sum
         job remains for segmented indexes (segment term_stats carry NEW
         terms only, so a pre-existing term's persisted cf would miss
-        segment postings) and legacy cf-less indexes. Lucene
-        collection-statistics semantics on every path: tombstoned docs
-        still COUNT until a merge physically drops them (the build-time
-        cf froze before any deletion; the job applies no mask)."""
+        segment postings). Lucene collection-statistics semantics on
+        every path: tombstoned docs still COUNT until a merge physically
+        drops them (the build-time cf froze before any deletion; the job
+        applies no mask)."""
         terms = list(terms)
         if not self.manifest.get("segments"):
-            cf = self._cf_from_stats(terms)
-            if cf is not None:
-                return cf
+            return self._cf_from_stats(terms)
         if self.codec != "compact":
             raise ValueError(
                 "collection_tf needs the compact codec (raw tf varints); "
                 "this index stores precomputed f64 impacts")
-        counts = Counter({t: 1 for t in terms})
-        qcounts, buckets, _ = self._terms_from_counts(counts)
+        qcounts, _ = self._terms_from_counts({t: 1 for t in terms})
         if not qcounts:
             return {}
         from data_text_search_spark.functions.codec import varint_decode
@@ -1528,40 +1471,21 @@ class IndexSearcher:
                 out.append((str(term), int(tfs.sum())))
             return pd.DataFrame(out, columns=["term", "cf"])
 
-        cols = ["term", "n_docs", "tfs"]
-        if self._units is not None:
-            local = self._colocated_run(sorted(qcounts), cf_kernel,
-                                        cols, "term string, cf long")
-        else:
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = blocks.mapInPandas(_map_batches(cf_kernel),
-                                       schema="term string, cf long")
+        local = self._colocated_run(sorted(qcounts), cf_kernel,
+                                    ["term", "n_docs", "tfs"],
+                                    "term string, cf long")
         rows = local.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
         return {r["term"]: int(r["cf"]) for r in rows}
 
-    def _cf_from_stats(self, terms: list[str]) -> "dict[str, int] | None":
-        """Per-term cf from the persisted term_stats column, or None when
-        the index predates the column (then the posting-sum job runs).
-        Terms absent from the live dictionary are absent from the result,
-        matching the job's output shape."""
-        if "cf" not in self._term_stats_all.columns:
-            return None
+    def _cf_from_stats(self, terms: list[str]) -> dict[str, int]:
+        """Per-term cf from the persisted term_stats column. Terms absent
+        from the live dictionary are absent from the result, matching
+        the posting-sum job's output shape."""
         if self._term_map is not None:
-            out: dict[str, int] = {}
-            for t in terms:
-                v = self._term_map.get(t)
-                if v is None:
-                    continue
-                if len(v) < 4 or v[3] is None:
-                    return None     # mixed/legacy dictionary rows
-                out[t] = int(v[3])
-            return out
+            return {t: self._term_map[t][2] for t in terms
+                    if t in self._term_map}
         rows = (self.term_stats.filter(F.col("term").isin(terms))
                 .select("term", "cf").collect())
-        if any(r["cf"] is None for r in rows):
-            return None
         return {r["term"]: int(r["cf"]) for r in rows}
 
     def search_similarity(self, query: str, model: str = "tfidf",
@@ -1614,7 +1538,7 @@ class IndexSearcher:
         if model not in self.SIMILARITIES:
             raise ValueError(f"unknown similarity {model!r}; "
                              f"one of {self.SIMILARITIES}")
-        qcounts, buckets, _ = self._query_terms(query)
+        qcounts, _ = self._query_terms(query)
         empty = RESULT_SCHEMA + ", rank int, score_abs double"
         if not qcounts:
             return self.spark.createDataFrame([], empty)
@@ -1657,7 +1581,7 @@ class IndexSearcher:
 
         kernel = _sim_topk_kernel_factory(qcounts, n, impact_fn,
                                           tomb=self._tomb_handle)
-        return self._topn_job(qcounts, buckets, kernel, n,
+        return self._topn_job(qcounts, kernel, n,
                               columns=BATCH_COLS)
 
     def score_all(self, query: str) -> DataFrame:
@@ -1670,21 +1594,15 @@ class IndexSearcher:
         kernel runs with k past any shard's doc count, which statically
         disables block-max pruning (θ_lb stays −inf) — exhaustive exact
         accumulation."""
-        qcounts, buckets, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
         k = (1 << 62)
         kernel = _shard_topk_kernel_factory(qcounts, k, self.codec, qidf,
                                             self.avgdl, self.k1, self.b,
                                             tomb=self._tomb_handle)
-        if self._units is not None:
-            return self._colocated_run(sorted(qcounts), kernel,
-                                       WAND_COLS, RESULT_SCHEMA)
-        blocks = self.postings.filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(list(qcounts)))
-        return (blocks.repartition(self._kernel_parts(), "shard")
-                .mapInPandas(_map_batches(kernel), schema=RESULT_SCHEMA))
+        return self._colocated_run(sorted(qcounts), kernel,
+                                   WAND_COLS, RESULT_SCHEMA)
 
     def function_score(self, query: str, values: DataFrame,
                        val_col: str = "n_chars", n: int = 10) -> DataFrame:
@@ -1769,10 +1687,7 @@ class IndexSearcher:
             return spark.createDataFrame([], out_schema)
         qdf = F.broadcast(spark.createDataFrame([(t,) for t in qtokens],
                                                 "qtok string"))
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
-        matched = (ts.select("term", "pruned")
+        matched = (self._term_stats_all.select("term", "pruned")
                    .join(qdf, _fuzzy_match_cond(F.col("term"), F.col("qtok"),
                                                 max_mistakes))
                    .groupBy("term", "pruned").agg(F.count("*").alias("w"))
@@ -1784,21 +1699,6 @@ class IndexSearcher:
             return spark.createDataFrame([], out_schema)
         dstats = spark.read.parquet(
             *committed_doc_stats_paths(self.paths.root, self.manifest))
-        if ("n_chars" not in dstats.columns
-                or dstats.filter(F.col("n_chars").isNull()).head(1)):
-            # index built before n_chars was stored — or a MIXED union
-            # (legacy base doc_stats + post-n_chars segments), where the
-            # missing parquet column surfaces as NULL for the legacy rows
-            # and would silently drop those docs from the score. Derive
-            # the column once from the tokenized checkpoint instead (same
-            # formula as doc_stats_df); the null probe is a column-pruned
-            # LIMIT 1 scan, ~free on the current all-non-null layout
-            from data_text_search_spark.operators.index_build import (
-                committed_tokenized_paths,
-                doc_stats_df,
-            )
-            dstats = doc_stats_df(spark.read.parquet(
-                *committed_tokenized_paths(self.paths.root, self.manifest)))
         return (local.join(dstats.select("doc_id", "n_chars"), "doc_id")
                 .select("doc_id",
                         F.col("n_chars").cast("int").alias("n_chars"),
@@ -1822,21 +1722,8 @@ class IndexSearcher:
         if weights:
             kernel = _fuzzy_tf_kernel_factory(weights,
                                               tomb=self._tomb_handle)
-            if self._units is not None:
-                parts.append(self._colocated_run(sorted(weights), kernel,
-                                                 FUZZY_COLS, mc_schema))
-            else:
-                if self._term_map is not None:
-                    buckets = sorted({self._term_map[t][0] for t in weights
-                                      if t in self._term_map})
-                    blocks = self.postings.filter(
-                        F.col("term_bucket").isin(buckets))
-                else:
-                    blocks = self.postings
-                blocks = blocks.filter(F.col("term").isin(sorted(weights)))
-                parts.append(
-                    blocks.repartition(self._kernel_parts(), "shard")
-                    .mapInPandas(_map_batches(kernel), schema=mc_schema))
+            parts.append(self._colocated_run(sorted(weights), kernel,
+                                             FUZZY_COLS, mc_schema))
         if pruned_w:
             from data_text_search_spark.operators.index_build import (
                 committed_tokenized_paths,
@@ -1885,21 +1772,8 @@ class IndexSearcher:
         if weights:
             kernel = _presence_kernel_factory(weights,
                                               tomb=self._tomb_handle)
-            if self._units is not None:
-                parts.append(self._colocated_run(sorted(weights), kernel,
-                                                 PRESENCE_COLS, mc_schema))
-            else:
-                if self._term_map is not None:
-                    buckets = sorted({self._term_map[t][0] for t in weights
-                                      if t in self._term_map})
-                    blocks = self.postings.filter(
-                        F.col("term_bucket").isin(buckets))
-                else:
-                    blocks = self.postings
-                blocks = blocks.filter(F.col("term").isin(sorted(weights)))
-                parts.append(
-                    blocks.repartition(self._kernel_parts(), "shard")
-                    .mapInPandas(_map_batches(kernel), schema=mc_schema))
+            parts.append(self._colocated_run(sorted(weights), kernel,
+                                             PRESENCE_COLS, mc_schema))
         if pruned_w:
             from data_text_search_spark.operators.index_build import (
                 committed_tokenized_paths,
@@ -1935,7 +1809,7 @@ class IndexSearcher:
         (tombstone-masked) — the filter-context match set behind the
         stats / sort aggregations. Answered from posting blocks only
         (vocabulary-directed scan, no corpus pass)."""
-        qcounts, _, _ = self._query_terms(query)
+        qcounts, _ = self._query_terms(query)
         if not qcounts:
             return None
         local = self._tf_weighted_counts({t: 1 for t in qcounts}, {})
@@ -2130,10 +2004,7 @@ class IndexSearcher:
             weights = {t: 1 for t in warm_m if not mm[t][2]}
             pruned_w = {t: 1 for t in warm_m if mm[t][2]}
         else:
-            ts = self._term_stats_all
-            if "pruned" not in ts.columns:
-                ts = ts.withColumn("pruned", F.lit(False))
-            matched = (ts.select("term", "pruned")
+            matched = (self._term_stats_all.select("term", "pruned")
                        .filter(F.col("term").startswith(prefix))
                        .limit(max_terms + 1).collect())
             if len(matched) > max_terms:
@@ -2166,10 +2037,7 @@ class IndexSearcher:
         if not pattern:
             raise ValueError("regex_search: empty pattern")
         spark = self.spark
-        ts = self._term_stats_all
-        if "pruned" not in ts.columns:
-            ts = ts.withColumn("pruned", F.lit(False))
-        matched = (ts.select("term", "pruned")
+        matched = (self._term_stats_all.select("term", "pruned")
                    .filter(F.col("term").rlike(f"^(?:{pattern})$"))
                    .limit(max_terms + 1).collect())
         if len(matched) > max_terms:
@@ -2347,7 +2215,7 @@ class IndexSearcher:
         the form a production user with an on-disk index calls.
         Tombstoned docs are excluded (they are excluded from every
         query path)."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         if not qcounts:
             return spark.createDataFrame(
@@ -2371,7 +2239,7 @@ class IndexSearcher:
         fg_df needs no re-tokenize), background df from the live term
         dictionary. Same lift semantics/oracle as the logical-index
         operator."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         empty = "term string, fg_df long, bg_df long, lift double"
         if not qcounts:
@@ -2582,7 +2450,7 @@ class IndexSearcher:
         counts = Counter(tokenize_py(query))
         t["parse_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         t["dictionary_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         if not qcounts:
             return {"timings_ms": t, "rows": []}
@@ -2591,17 +2459,8 @@ class IndexSearcher:
                                             tomb=self._tomb_handle)
         spark = self.spark
         t0 = _time.perf_counter()
-        if self._units is not None:
-            local = self._colocated_run(sorted(qcounts), kernel,
-                                        WAND_COLS, RESULT_SCHEMA)
-        else:
-            blocks = self.postings.filter(
-                F.col("term_bucket").isin(buckets)
-                & F.col("term").isin(list(qcounts)))
-            local = (blocks.repartition(self._kernel_parts(), "shard")
-                     .mapInPandas(_map_batches(kernel),
-                                  schema=RESULT_SCHEMA))
-        pdf = local.toPandas()
+        pdf = self._colocated_run(sorted(qcounts), kernel,
+                                  WAND_COLS, RESULT_SCHEMA).toPandas()
         t["kernel_job_ms"] = round((_time.perf_counter() - t0) * 1e3, 3)
         t0 = _time.perf_counter()
         out = _merge_topn_driver(pdf, n)
@@ -2615,8 +2474,7 @@ class IndexSearcher:
         one row per matching query term with (tf, df, idf, contribution),
         the additive decomposition of the doc's BM25 score. Reads only
         the query terms' posting blocks whose [first_doc_id, last_doc_id]
-        range covers the doc (bucket + term + range-pruned fetch, a few
-        KB), decodes driver-side; tombstoned docs return the typed empty
+        range covers the doc (term + range-pruned fetch, a few KB), decodes driver-side; tombstoned docs return the typed empty
         result (a deleted doc cannot be explained, like ES on a deleted
         _id). Columns: (term, tf, df, idf 6dp, contribution 4dp),
         term asc."""
@@ -2627,14 +2485,13 @@ class IndexSearcher:
         schema = ("term string, tf long, df long, idf double, "
                   "contribution double")
         counts = Counter(tokenize_py(query))
-        qcounts, buckets, qidf = self._terms_from_counts(counts)
+        qcounts, qidf = self._terms_from_counts(counts)
         if not qcounts or (self._tombstones is not None
                            and int(doc_id) in self._tombstones):
             return self.spark.createDataFrame([], schema)
         dfm = self._query_term_df(qcounts)
         blocks = (self.postings
-                  .filter(F.col("term_bucket").isin(buckets)
-                          & F.col("term").isin(list(qcounts))
+                  .filter(F.col("term").isin(list(qcounts))
                           & (F.col("first_doc_id") <= int(doc_id))
                           & (F.col("last_doc_id") >= int(doc_id)))
                   .select("term", "first_doc_id", "n_docs", "doc_deltas",
@@ -2671,21 +2528,15 @@ class IndexSearcher:
     def explain(self, query: str, n: int = 10) -> dict:
         """Query EXPLAIN without executing: per-term dictionary stats
         (df, idf, query count) plus every execution decision search()
-        would take for this query — interactive-local eligibility,
-        distributed executor form (colocated units vs bucket-pruned
-        scan), task count, whether the scatter-gather driver merge
-        applies, buckets touched, posting volume to decode, and active
-        tombstone masking. Reads ONLY the term dictionary (vocab-sized);
+        would take for this query — interactive-local eligibility, the
+        distributed executor (always the colocated-units stage) and its
+        task count, whether the scatter-gather driver merge applies,
+        posting volume to decode, and active tombstone masking. Reads ONLY the term dictionary (vocab-sized);
         never decodes a posting — safe to call per query at any index
         size."""
         counts = Counter(tokenize_py(query))
-        qcounts, buckets, qidf = self._query_terms(query)
-        if self._term_map is not None:
-            dfs = {t: int(self._term_map[t][2]) for t in qcounts}
-        else:
-            dfs = {r["term"]: int(r["df"]) for r in
-                   self.term_stats.filter(F.col("term").isin(list(qcounts)))
-                   .select("term", "df").collect()}
+        qcounts, qidf = self._query_terms(query)
+        dfs = self._query_term_df(qcounts) if qcounts else {}
         missing = sorted(set(counts) - set(qcounts))
         pruned: list[str] = []
         if missing:
@@ -2697,13 +2548,8 @@ class IndexSearcher:
                     and (self._term_map is not None
                          or n_terms is None
                          or n_terms <= self.DRIVER_TERM_CACHE_MAX))
-        if self._units is not None:
-            tasks = min(len(self._units),
-                        self.spark.sparkContext.defaultParallelism)
-            executor = "colocated-units"
-        else:
-            tasks = self._kernel_parts()
-            executor = "bucket-pruned-scan"
+        tasks = min(len(self._units),
+                    self.spark.sparkContext.defaultParallelism)
         return {
             "query": query,
             "terms": [{"term": t, "qcount": int(c), "df": dfs[t],
@@ -2717,10 +2563,8 @@ class IndexSearcher:
                                   if self._tombstones is not None else 0),
             "plan": {
                 "interactive_local_eligible": local_ok,
-                "distributed_executor": executor,
+                "distributed_executor": "colocated-units",
                 "tasks": int(tasks),
-                "buckets_touched": len(buckets),
-                "term_buckets": int(self.manifest["term_buckets"]),
                 "driver_merge": tasks * n <= self.DRIVER_MERGE_MAX_ROWS,
             },
         }
@@ -3104,7 +2948,7 @@ class IndexSearcher:
         pagination is a scan-bounded operation by nature), then the
         cursor predicate + TakeOrderedAndProject. Composes with
         tombstones and filter-context `keep` like every other path."""
-        qcounts, _, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         spark = self.spark
         empty = "doc_id long, score double, rank int, score_abs double"
         if not qcounts:
@@ -3322,7 +3166,7 @@ class IndexSearcher:
         MB; the reference's in-process dict answers in milliseconds. This
         path closes that gap for interactive use: the SAME exact kernel
         runs on the driver over the query terms' blocks, which are
-        fetched once (bucket+term-pruned scan) and kept in a term-level
+        fetched once (term-pruned scan) and kept in a term-level
         LRU, so repeated-vocabulary queries skip Spark entirely.
         Size-gated by Σ df of the query terms (postings that would not
         comfortably fit a driver): above the gate, or when the term
@@ -3332,19 +3176,16 @@ class IndexSearcher:
         cols = ["doc_id", "score", "rank", "score_abs"]
         if self._term_map is None:
             self.warm()
-        qcounts, buckets, qidf = self._query_terms(query)
+        qcounts, qidf = self._query_terms(query)
         if not qcounts:
             return pd.DataFrame(columns=cols)
         if (self._term_map is None
-                or sum(self._term_map[t][2] for t in qcounts) > max_postings):
+                or sum(self._term_map[t][1] for t in qcounts) > max_postings):
             return self.search(query, n).toPandas()
         missing = sorted(t for t in qcounts if t not in self._local_blocks)
         if missing:
-            mb = sorted({self._term_map[t][0] for t in missing})
-            pdf = (self.postings
-                   .filter(F.col("term_bucket").isin(mb)
-                           & F.col("term").isin(missing))
-                   .drop("term_bucket").toPandas())
+            pdf = (self.postings.filter(F.col("term").isin(missing))
+                   .toPandas())
             for t, rows in pdf.groupby("term"):
                 self._local_blocks[str(t)] = rows.reset_index(drop=True)
                 self._local_postings += int(rows["n_docs"].sum())

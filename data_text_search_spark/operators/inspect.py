@@ -34,8 +34,6 @@ def index_info(spark: SparkSession, root: str) -> dict:
         raise ValueError(f"no complete index at {root}")
     paths = IndexPaths(root)
     ts = spark.read.parquet(*committed_term_stats_paths(root, m))
-    if "pruned" not in ts.columns:
-        ts = ts.withColumn("pruned", F.lit(False))
     vocab = ts.agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("pruned"), 1).otherwise(0)).alias("pruned"),
@@ -72,7 +70,7 @@ def index_info(spark: SparkSession, root: str) -> dict:
         "segments": len(m.get("segments", [])),
         "tombstone_files": len(m.get("tombstones", [])),
         "shards": m["shards"],
-        "term_buckets": m["term_buckets"],
+        "subshards": m["subshards"],
         "config": dict(m["config"]),
         "bytes": bytes_by,
         "total_bytes": sum(bytes_by.values()),

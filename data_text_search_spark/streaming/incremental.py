@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_text_search_spark.config import BM25Config, IndexPaths
@@ -38,10 +38,12 @@ from data_text_search_spark.operators.index_build import (
     POSTINGS_SCHEMA,
     _encode_shard_factory,
     _write_manifest_atomic,
+    doc_stats_df,
     committed_doc_stats_paths,
     committed_term_stats_paths,
     committed_tombstone_paths,
     load_manifest,
+    write_postings,
 )
 from data_text_search_spark.functions.text import tokenize_tf_pandas_udf
 
@@ -279,7 +281,6 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     invisible to readers until the caller's manifest commit. Returns the
     new-term count."""
     cfg = manifest["config"]
-    tp = manifest["term_buckets"]
     avgdl = manifest["avgdl"]
     td = (pairs_df.select("doc_id", "doc_len", "shard",
                           F.explode("pairs").alias("p"))
@@ -290,12 +291,6 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     # flagged, not deleted) — a pruned hot term in the delta must stay
     # pruned, not resurrect with a delta-only df and inflated IDF
     full_stats = spark.read.parquet(*stats_paths)
-    if "cf" not in full_stats.columns:
-        # legacy base dictionary (pre-cf): keep the segment schema
-        # aligned so the union below works; collection_tf falls back to
-        # the posting-sum job on such indexes anyway
-        full_stats = full_stats.withColumn(
-            "cf", F.lit(None).cast("long"))
     # cf for NEW terms is exact (the term has no base postings, so its
     # whole collection frequency is this segment's Σtf); pre-existing
     # terms keep their frozen base cf, which is why collection_tf
@@ -308,12 +303,8 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
                                - F.log(F.col("df") + 0.5))
                    .withColumn("pruned",
                                ~(F.col("idf") > F.lit(cfg["alpha"]))
-                               | (F.col("term").isin(
-                                      list(cfg.get("stopwords", [])))
-                                  if cfg.get("stopwords") else F.lit(False)))
-                   .withColumn("term_bucket",
-                               F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int"))
-                   )
+                               | (F.col("term").isin(list(cfg["stopwords"]))
+                                  if cfg["stopwords"] else F.lit(False))))
     # ONE job: the new-term count rides the segment term_stats write as
     # an observe() metric (the round-6-start shape persisted delta_terms,
     # ran a count job, then re-ran the plan for the write). The dir is
@@ -327,10 +318,10 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
     # §2.6 / the base build's concurrent doc_stats stage), so the
     # segment encode's wall cost is max(), not sum(). All four dirs stay
     # invisible until the caller's atomic manifest commit, and the
-    # threads are joined (errors re-raised) before this function
-    # returns, so the crash protocol is unchanged.
+    # threads are joined on EVERY exit — a failed chain must not leave
+    # orphan writers racing a same-process retry, which wipes and
+    # rewrites these very dirs — so the crash protocol is unchanged.
     import threading
-    from data_text_search_spark.operators.index_build import doc_stats_df
     side_err: list[BaseException] = []
 
     def _side(fn):
@@ -343,72 +334,56 @@ def _encode_segment(spark: SparkSession, paths: IndexPaths, manifest: dict,
         t.start()
         return t
 
+    # doc_stats and the per-segment tokenized checkpoint (merges re-score
+    # from it without re-tokenizing)
     side_threads = [
-        _side(lambda: doc_stats_df(pairs_df, complete_n_chars=True)
+        _side(lambda: doc_stats_df(pairs_df)
               .write.mode("overwrite").parquet(paths.doc_stats_seg(seg_id))),
         _side(lambda: pairs_df.write.mode("overwrite")
               .parquet(paths.tokenized_seg(seg_id))),
     ]
+    try:
+        dt_obs = Observation()
+        (delta_terms.observe(dt_obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(paths.term_stats_seg(seg_id)))
+        new_terms = int(dt_obs.get["n"])
+        if new_terms:
+            live_stats = (full_stats.unionByName(
+                spark.read.schema(delta_terms.schema)
+                .parquet(paths.term_stats_seg(seg_id)))
+                .filter(~F.col("pruned")))
+        else:
+            from data_text_search_spark.sources import fsio
+            fsio.delete(paths.term_stats_seg(seg_id))
+            live_stats = full_stats.filter(~F.col("pruned"))
 
-    from pyspark.sql import Observation
-    dt_obs = Observation()
-    (delta_terms.observe(dt_obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite").parquet(paths.term_stats_seg(seg_id)))
-    new_terms = int(dt_obs.get["n"])
-    if new_terms:
-        live_stats = (full_stats.unionByName(
-            spark.read.schema(delta_terms.schema)
-            .parquet(paths.term_stats_seg(seg_id)))
-            .filter(~F.col("pruned")))
-    else:
-        from data_text_search_spark.sources import fsio
-        fsio.delete(paths.term_stats_seg(seg_id))
-        live_stats = full_stats.filter(~F.col("pruned"))
-
-    k1, b = cfg["k1"], cfg["b"]
-    enc = (td.join(live_stats.select("term", "idf"), "term")
-           .withColumn(
-               "impact",
-               F.col("idf") * F.col("tf") * F.lit(k1 + 1)
-               / (F.col("tf") + F.lit(k1)
-                  * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
-           .select("term", "doc_id", "tf", "impact", "shard",
-                   *(["doc_len"] if cfg.get("impact_codec", "f64") == "compact"
-                     else [])))
-    kernel = _encode_shard_factory(cfg["block_size"],
-                                   cfg.get("impact_codec", "f64"))
-    blocks = (enc.groupBy("shard").applyInPandas(kernel, schema=POSTINGS_SCHEMA)
-              .withColumn("term_bucket",
-                          F.pmod(F.xxhash64("term"), F.lit(tp)).cast("int")))
-    subshards = manifest.get("subshards")
-    if subshards:
-        # layout v2 — segments mirror the base's spart colocation dirs
-        # (one term-sorted file per unit) so the shuffle-free query path
-        # covers them too; same shards>subshards realignment as the base
-        # build (index_build.py postings stage)
-        sparted = blocks.withColumn(
-            "spart", F.pmod(F.col("shard"), F.lit(subshards)).cast("int"))
-        if manifest["shards"] > subshards:
-            sparted = sparted.repartition(subshards, "spart")
-        (sparted
-         .sortWithinPartitions("spart", "term", "shard", "block_id")
-         .write.mode("overwrite")
-         .option("parquet.block.size", str(16 << 20))
-         .partitionBy("spart")
-         .parquet(paths.postings_seg(seg_id)))
-    else:
-        (blocks.repartition(tp, "term_bucket")
-         .sortWithinPartitions("term", "shard", "block_id")
-         .write.mode("overwrite").partitionBy("term_bucket")
-         .parquet(paths.postings_seg(seg_id)))
-    # doc_stats (complete n_chars — pairs_df is fresh tokenize output)
-    # and the per-segment tokenized checkpoint (merges re-score from it
-    # without re-tokenizing) were written by the side threads above
-    for t in side_threads:
-        t.join()
+        k1, b = cfg["k1"], cfg["b"]
+        enc = (td.join(live_stats.select("term", "idf"), "term")
+               .withColumn(
+                   "impact",
+                   F.col("idf") * F.col("tf") * F.lit(k1 + 1)
+                   / (F.col("tf") + F.lit(k1)
+                      * (1 - b + b * F.col("doc_len") / F.lit(avgdl))))
+               .select("term", "doc_id", "tf", "impact", "shard",
+                       *(["doc_len"] if cfg["impact_codec"] == "compact"
+                         else [])))
+        kernel = _encode_shard_factory(cfg["block_size"],
+                                       cfg["impact_codec"])
+        # segments mirror the base's colocation units (one term-sorted
+        # file per spart) so the shuffle-free query path covers them too
+        write_postings(
+            enc.groupBy("shard").applyInPandas(kernel,
+                                               schema=POSTINGS_SCHEMA),
+            manifest["shards"], manifest["subshards"],
+            paths.postings_seg(seg_id))
+    finally:
+        # the chain's own error (if any) propagates; side errors are
+        # surfaced only when the chain succeeded
+        for t in side_threads:
+            t.join()
     if side_err:
         raise side_err[0]
-    return int(new_terms)
+    return new_terms
 
 
 def merge_tier(spark: SparkSession, root: str) -> dict:
@@ -526,8 +501,8 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
     c = manifest["config"]
     cfg = BM25Config(k1=c["k1"], b=c["b"], alpha=c["alpha"], clean=c["clean"],
                      block_size=c["block_size"],
-                     term_partitions=manifest["term_buckets"],
-                     impact_codec=c.get("impact_codec", "f64"))
+                     impact_codec=c["impact_codec"],
+                     stopwords=tuple(c["stopwords"]))
     pairs = spark.read.parquet(*committed_tokenized_paths(root, manifest))
     tpaths = committed_tombstone_paths(root, manifest)
     if tpaths:
@@ -542,8 +517,7 @@ def merge_segments(spark: SparkSession, root: str) -> dict:
     fsio.delete(tmp, spark)
     build_index(spark, corpus=None, root=tmp, config=cfg,
                 shards=manifest["shards"], groups=manifest["groups"],
-                resume=False, tokenized_pairs=pairs,
-                subshards=manifest.get("subshards", 0))
+                resume=False, tokenized_pairs=pairs)
     old = f"{root}.premerge"
     fsio.delete(old, spark)
     marker = f"{root}.MERGE_SWAP"

@@ -409,16 +409,106 @@ def test_manifest_versioned_commit_crash_windows(spark, tmp_path):
         json.dump(dict(m, probe=2), f)
     assert load_manifest(root)["probe"] == 2
 
-    # legacy single-file manifests (pre-versioning indexes) still load,
-    # and their first new commit supersedes + removes the legacy file
-    for _, p in _manifest_versions(paths.manifest):
-        os.remove(p)
-    with open(paths.manifest, "w") as f:
-        json.dump(dict(m, probe="legacy"), f)
-    assert load_manifest(root)["probe"] == "legacy"
-    _write_manifest_atomic(paths.manifest, dict(m, probe=3))
-    assert load_manifest(root)["probe"] == 3
-    assert not os.path.exists(paths.manifest)
+
+def test_version_gate_rejects_older_indexes(spark, tmp_path):
+    """ONE layout-version check: a manifest rewound to an older version,
+    stripped of `subshards`, or written as the pre-versioning
+    single-file manifest.json raises the same rebuild error from every
+    reader and writer; a fresh build pins the current version and
+    writes no term_bucket column."""
+    import os
+
+    from data_text_search_spark.config import IndexPaths
+    from data_text_search_spark.operators.index_build import (
+        MANIFEST_VERSION,
+        _manifest_versions,
+        _write_manifest_atomic,
+    )
+
+    root = _base(spark, tmp_path, n=40)
+    fresh = load_manifest(root)
+    assert fresh["version"] == MANIFEST_VERSION == 3
+    for d in ("postings", "term_stats"):
+        assert "term_bucket" not in spark.read.parquet(f"{root}/{d}").columns
+    paths = IndexPaths(root)
+    delta = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [900000], "content": ["never appended"]}))
+    cases = [
+        (dict(fresh, version=2), False),
+        ({k: v for k, v in fresh.items() if k != "version"}, False),
+        ({k: v for k, v in fresh.items() if k != "subshards"}, False),
+        (fresh, True),
+    ]
+    for m, single_file in cases:
+        for _, p in _manifest_versions(paths.manifest):
+            os.remove(p)
+        if single_file:
+            with open(paths.manifest, "w") as f:
+                json.dump(m, f)
+        else:
+            _write_manifest_atomic(paths.manifest, m)
+        with pytest.raises(ValueError, match="older engine"):
+            IndexSearcher(spark, root)
+        with pytest.raises(ValueError, match="older engine"):
+            build_index(spark, None, root, BM25Config(), resume=True)
+        with pytest.raises(ValueError, match="older engine"):
+            add_documents(spark, root, delta, id_col="doc_id")
+
+
+def test_failed_segment_chain_leaves_no_orphan_writers(spark, tmp_path,
+                                                       monkeypatch):
+    """When the segment's term_stats→postings chain fails, add_documents
+    joins its doc_stats/tokenized side writers before the error
+    propagates (no orphan thread left to race a retry that wipes and
+    rewrites the same dirs), and a retry of the same batch returns rows
+    identical to a clean append."""
+    import threading
+    import time
+
+    from data_text_search_spark.streaming import incremental
+
+    root = _base(spark, tmp_path / "failed", n=60)
+    clean = _base(spark, tmp_path / "clean", n=60)
+    delta_pdf = pd.DataFrame({
+        "doc_id": [500000, 500001],
+        "content": ["quagga zebra return import", "okapi quagga def"]})
+    add_documents(spark, clean, spark.createDataFrame(delta_pdf),
+                  id_col="doc_id", batch_key="b1")
+
+    started = []
+    real_start = threading.Thread.start
+
+    def spy_start(t):
+        started.append((t, getattr(t, "_target", None)))
+        real_start(t)
+
+    real_ds = incremental.doc_stats_df
+
+    def slow_doc_stats(df):
+        time.sleep(3)   # the side writer outlives the failing chain
+        return real_ds(df)
+
+    def failing_write(*a, **k):
+        raise RuntimeError("postings write failed")
+
+    monkeypatch.setattr(threading.Thread, "start", spy_start)
+    monkeypatch.setattr(incremental, "doc_stats_df", slow_doc_stats)
+    monkeypatch.setattr(incremental, "write_postings", failing_write)
+    with pytest.raises(RuntimeError, match="postings write failed"):
+        add_documents(spark, root, spark.createDataFrame(delta_pdf),
+                      id_col="doc_id", batch_key="b1")
+    side = [t for t, f in started
+            if "_encode_segment" in getattr(f, "__qualname__", "")]
+    assert len(side) == 2
+    assert not [t for t in side if t.is_alive()]
+    monkeypatch.undo()
+
+    add_documents(spark, root, spark.createDataFrame(delta_pdf),
+                  id_col="doc_id", batch_key="b1")
+    queries = ["quagga", "return import", "okapi def zebra"]
+    got = IndexSearcher(spark, root).search_batch_pandas(queries, 10)
+    want = IndexSearcher(spark, clean).search_batch_pandas(queries, 10)
+    assert got.equals(want) and len(got)
 
 
 def test_write_text_new_refuses_overwrite(spark, tmp_path, monkeypatch):
@@ -470,6 +560,12 @@ def test_missing_colocation_unit_fails_loudly(spark, tmp_path):
         s.search_batch_pandas(["return import"], 5)
 
 
+def _probe_manifest(probe: int) -> dict:
+    """Smallest manifest load_manifest accepts (current layout version)."""
+    from data_text_search_spark.operators.index_build import MANIFEST_VERSION
+    return {"version": MANIFEST_VERSION, "subshards": 1, "probe": probe}
+
+
 def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
     """load_manifest lists versions then reads the latest — a concurrent
     commit can GC that exact file between the two steps. The reader must
@@ -488,7 +584,7 @@ def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "race")
     os.makedirs(root, exist_ok=True)
     paths = IndexPaths(root)
-    _write_manifest_atomic(paths.manifest, {"probe": 1})
+    _write_manifest_atomic(paths.manifest, _probe_manifest(1))
 
     real_read = fsio.read_text
     state = {"fired": False}
@@ -498,7 +594,7 @@ def test_load_manifest_survives_concurrent_gc(spark, tmp_path, monkeypatch):
             state["fired"] = True
             # simulate the concurrent committer: newer version lands,
             # then the one we were about to read is GC'd
-            _write_manifest_atomic(paths.manifest, {"probe": 2})
+            _write_manifest_atomic(paths.manifest, _probe_manifest(2))
             raise FileNotFoundError(path)
         return real_read(path, spark_)
 
@@ -532,7 +628,7 @@ def test_load_manifest_raises_when_all_versions_vanish(spark, tmp_path,
     root = str(tmp_path / "wipe")
     os.makedirs(root, exist_ok=True)
     paths = IndexPaths(root)
-    _write_manifest_atomic(paths.manifest, {"probe": 1})
+    _write_manifest_atomic(paths.manifest, _probe_manifest(1))
 
     def wiping_read(path, spark_=None):
         for f in os.listdir(root):

@@ -233,21 +233,68 @@ def test_index_backed_fuzzy_covers_pruned_terms(spark, corpus, tmp_path):
         _fuzzy_parity(spark, s, corpus, q)
 
 
-def test_index_backed_fuzzy_n_chars_fallback(spark, corpus, tmp_path):
-    """Indexes built before n_chars was stored in doc_stats must still
-    answer fuzzy queries (denominator derived from the tokenized
-    checkpoint on the fly)."""
-    import pandas as pd
-
-    root = str(tmp_path / "old_idx")
-    build_index(spark, corpus, root, BM25Config(), id_col="doc_id",
+def test_warm_budget_counts_the_collected_dictionary(spark, corpus, tmp_path):
+    """warm() collects the FULL dictionary (alpha-pruned rows included),
+    so its driver-memory gate must count that frame — the budget
+    term_meta() applies — not the smaller live one. With the budget
+    between the two counts no map is built, and rows still equal a
+    searcher warmed at the default budget."""
+    root = str(tmp_path / "budget")
+    build_index(spark, corpus, root, BM25Config(alpha=1.0), id_col="doc_id",
                 shards=4, groups=1)
-    paths = IndexPaths(root)
-    old = spark.read.parquet(paths.doc_stats).drop("n_chars").toPandas()
-    shutil.rmtree(paths.doc_stats)
-    spark.createDataFrame(old).write.parquet(paths.doc_stats)
     s = IndexSearcher(spark, root)
+    n_live, n_all = s.term_stats.count(), s._term_stats_all.count()
+    assert n_live < n_all, "alpha=1.0 should prune hot terms on this corpus"
+    s.DRIVER_TERM_CACHE_MAX = n_live
+    s.warm()
+    assert s._term_map is None and s._meta_map is None
+    ref = IndexSearcher(spark, root)
+    ref.warm()
+    assert ref._term_map is not None
+    for q in ["return import", "def get_heap", "zyzzyva"]:
+        assert [tuple(r) for r in s.search(q, 10).collect()] == \
+            [tuple(r) for r in ref.search(q, 10).collect()]
+    terms = ["def", "return", "get_heap", "zzznope"]
+    assert s.term_meta(terms) == ref.term_meta(terms)
+    assert s._meta_map is False
+
+
+def test_index_without_units_returns_typed_empty(spark, corpus, tmp_path,
+                                                 monkeypatch):
+    """Every term alpha-pruned or a stopword: no posting is encoded, so
+    no colocation unit exists. The index still opens, every scoring
+    surface returns its typed empty result, and no 0-task kernel job is
+    ever requested."""
+    root = str(tmp_path / "nounits")
+    build_index(spark, corpus, root,
+                BM25Config(alpha=1e9, stopwords=("return",)),
+                id_col="doc_id", shards=4, groups=1)
+    s = IndexSearcher(spark, root)
+    assert s._units == []
+    real_range = spark.range
+
+    def checked_range(start, end=None, step=1, numPartitions=None):
+        assert numPartitions != 0, "0-task kernel job requested"
+        return real_range(start, end, step, numPartitions)
+
+    monkeypatch.setattr(spark, "range", checked_range)
+    q = "return import def"
+    top_cols = ["doc_id", "score", "rank", "score_abs"]
+    for df in (s.search(q, 5), s.boolean_search(q, must=["import"]),
+               s.search_msm(q, 1)):
+        assert df.columns == top_cols and df.count() == 0
+    batch = s.search_batch_pandas([q, "def"], 5)
+    assert batch.empty and list(batch.columns) == ["query_id"] + top_cols
+    assert s.score_all(q).columns == ["doc_id", "score"]
+    assert s.score_all(q).count() == 0
+    fz = s.fuzzy_search("qqqqqqq")
+    assert fz.count() == 0 and fz.columns == [
+        "doc_id", "n_chars", "match_count", "score", "score_abs"]
+    # pruned terms still match fuzzily, from the tokenized checkpoint
     _fuzzy_parity(spark, s, corpus, "retur improt")
+    ex = s.explain(q)
+    assert ex["terms"] == [] and ex["plan"]["tasks"] == 0
+    assert ex["alpha_pruned_terms"] == ["def", "import", "return"]
 
 
 def test_doc_id_collision_raises(spark, tmp_path):
@@ -285,7 +332,7 @@ def test_checkpoint_n_chars_matches_formula(spark, corpus, tmp_path):
     assert tok.filter(F.col("n_chars") != derived).count() == 0
     assert tok.filter(F.col("n_chars").isNull()).count() == 0
     # column pruning: the trusted projection must not scan `pairs`
-    plan = doc_stats_df(tok, complete_n_chars=True)._jdf.queryExecution() \
+    plan = doc_stats_df(tok)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "pairs" not in plan, plan
     # and the written doc_stats agrees with the checkpoint
@@ -293,31 +340,6 @@ def test_checkpoint_n_chars_matches_formula(spark, corpus, tmp_path):
     joined = (ds.alias("d").join(tok.alias("t"), "doc_id")
               .filter(F.col("d.n_chars") != F.col("t.n_chars")))
     assert joined.count() == 0
-
-
-def test_doc_stats_df_repairs_null_n_chars(spark):
-    """A mixed legacy+current checkpoint union surfaces n_chars as NULL
-    for legacy rows; doc_stats_df must derive those, not drop them."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_text_search_spark.operators.index_build import doc_stats_df
-
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2],
-        "shard": [0, 1],
-        "pairs": [[("ab", 2), ("c", 1)], [("xyz", 1)]],
-        "doc_len": [3, 1],
-        "n_chars": [None, 3],
-    })
-    df = spark.createDataFrame(
-        pdf, schema=("doc_id long, shard int, "
-                     "pairs array<struct<term:string,tf:int>>, "
-                     "doc_len int, n_chars long"))
-    got = {r["doc_id"]: r["n_chars"]
-           for r in doc_stats_df(df).collect()}
-    # doc 1: 2*2 + 1*1 + (3-1) = 7 (derived); doc 2: stored 3 kept
-    assert got == {1: 7, 2: 3}
 
 
 def _phrase_parity(spark, searcher_, corpus_df_, q, mm=1):

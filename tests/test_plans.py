@@ -39,20 +39,19 @@ def test_column_pruning(spark, docs_path):
     assert cols == {"doc_id", "lang"}, cols  # no 'text' read for a 2-col projection
 
 
-def test_postings_scan_prunes_term_bucket_and_term(spark, corpus, tmp_path_factory):
+def test_postings_scan_pushes_term_filter(spark, corpus, tmp_path_factory):
     from data_text_search_spark.operators.index_build import build_index
     from data_text_search_spark.operators.index_query import IndexSearcher
     root = str(tmp_path_factory.mktemp("planidx") / "idx")
     build_index(spark, corpus, root, id_col="doc_id", shards=4, groups=1)
     s = IndexSearcher(spark, root)
-    qcounts, buckets, _qidf = s._query_terms("zyzzyva obelisk")
-    blocks = s.postings.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(qcounts)))
+    qcounts, _qidf = s._query_terms("zyzzyva obelisk")
+    blocks = s.postings.filter(F.col("term").isin(list(qcounts)))
     pf = pushed_filters(blocks)
-    # the term IN-filter must reach the parquet scan (row-group pruning);
-    # term_bucket is a partition column (directory pruning, not in
-    # PushedFilters)
-    assert any("term" in f for f in pf), pf
+    # the term IN-filter must reach the parquet scan: on the term-sorted
+    # unit files it is the row-group min/max pruning key (the Spark-scan
+    # readers search_local and score_explain rely on it)
+    assert any("term" in f and "In" in f for f in pf), pf
 
 
 def test_query_term_join_is_broadcast(spark, corpus):
@@ -82,7 +81,7 @@ def test_batch_query_plan_is_shuffle_free_until_topk_merge(
     root = str(tmp_path_factory.mktemp("planidx2") / "idx")
     build_index(spark, corpus, root, id_col="doc_id", shards=4, groups=1)
     s = IndexSearcher(spark, root)
-    assert s._units, "layout v2 index must expose colocation units"
+    assert s._units, "a built index must expose colocation units"
     # default: per-task tops merge on the DRIVER (scatter-gather) — the
     # returned frame is a local relation, zero exchanges anywhere
     plan = formatted_plan(s.search_batch(["zyzzyva obelisk", "return"], 10))
@@ -99,23 +98,6 @@ def test_batch_query_plan_is_shuffle_free_until_topk_merge(
     assert "hashpartitioning(shard" not in plan
     assert "Scan parquet" not in plan  # no driver-planned postings scan
     assert "collect_list" in plan and "Window" not in plan
-
-
-def test_colocated_and_shuffle_executors_agree(spark, corpus, tmp_path_factory):
-    """The layout-v2 colocated kernel stage and the repartition("shard")
-    fallback must return identical rows (same kernels, different data
-    movement)."""
-    from data_text_search_spark.operators.index_build import build_index
-    from data_text_search_spark.operators.index_query import IndexSearcher
-    root = str(tmp_path_factory.mktemp("planidx3") / "idx")
-    build_index(spark, corpus, root, id_col="doc_id", shards=4, groups=2)
-    s = IndexSearcher(spark, root)
-    queries = ["zyzzyva obelisk", "return import", "def"]
-    got_co = [tuple(r) for r in s.search_batch(queries, 5).collect()]
-    got_single_co = [tuple(r) for r in s.search(queries[0], 5).collect()]
-    s._units = None  # force the shuffle fallback executor
-    assert [tuple(r) for r in s.search_batch(queries, 5).collect()] == got_co
-    assert [tuple(r) for r in s.search(queries[0], 5).collect()] == got_single_co
 
 
 def test_driver_and_distributed_merge_agree(spark, corpus, tmp_path_factory):

@@ -171,12 +171,19 @@ def test_similarity_needs_compact_codec(spark, corpus, tmp_path, searcher):
     # term_stats (the round-6 fast path) — and must agree with the
     # compact searcher's posting-derived values
     assert s.collection_tf(["hash"]) == searcher.collection_tf(["hash"])
-    # ... but a cf-less legacy dictionary on a non-compact codec still
-    # raises: the posting-sum fallback needs raw tf varints
-    s2 = IndexSearcher(spark, root)
-    s2._term_stats_all = s2._term_stats_all.drop("cf")
+    # ... but a segmented index on a non-compact codec still raises:
+    # the posting-sum job it takes there needs raw tf varints
+    s.manifest = _with_segment(s.manifest)
     with pytest.raises(ValueError, match="compact"):
-        s2.collection_tf(["hash"])
+        s.collection_tf(["hash"])
+
+
+def _with_segment(manifest: dict) -> dict:
+    """A manifest copy listing one segment — the state in which
+    collection_tf must take the posting-sum job (segment term_stats
+    carry new terms only, so the persisted cf is not trusted)."""
+    return dict(manifest, segments=[{"segment": 0, "n_docs": 0,
+                                     "new_terms": 0}])
 
 
 def test_similarity_unknown_model(searcher):
@@ -189,17 +196,14 @@ def test_collection_tf_fast_path_matches_job(searcher, stats):
     agree term for term (the round-6 fast path changes the execution,
     never the value)."""
     present = sorted(stats["cf"], key=lambda t: -stats["cf"][t])[:3]
-    fast = searcher._cf_from_stats(present)
-    assert fast is not None          # compact fixture persists cf
-    # force the posting-decode job by hiding the column
-    import pyspark.sql.functions as F
-    saved_all, saved_map = searcher._term_stats_all, searcher._term_map
+    fast = searcher.collection_tf(present)
+    # force the posting-decode job: the path a segmented index takes
+    saved = searcher.manifest
     try:
-        searcher._term_stats_all = saved_all.drop("cf")
-        searcher._term_map = None
+        searcher.manifest = _with_segment(saved)
         job = searcher.collection_tf(present)
     finally:
-        searcher._term_stats_all, searcher._term_map = saved_all, saved_map
+        searcher.manifest = saved
     assert fast == job == {t: stats["cf"][t] for t in present}
 
 
@@ -420,8 +424,13 @@ def test_stopword_index_semantics(spark, corpus, tmp_path):
 def test_stopword_flag_survives_incremental_delta(spark, corpus, tmp_path):
     """A NEW term arriving only in a delta segment that is on the stop
     list must be flagged pruned in the segment's term_stats (the same
-    no-resurrection rule as alpha-pruned hot terms)."""
-    from data_text_search_spark.streaming.incremental import add_documents
+    no-resurrection rule as alpha-pruned hot terms) — and stay pruned
+    when merge_segments rebuilds the index from its checkpoints."""
+    from data_text_search_spark.operators.index_build import load_manifest
+    from data_text_search_spark.streaming.incremental import (
+        add_documents,
+        merge_segments,
+    )
 
     root = str(tmp_path / "stopinc")
     build_index(spark, corpus, root,
@@ -436,6 +445,9 @@ def test_stopword_flag_survives_incremental_delta(spark, corpus, tmp_path):
     assert s.search("zzznewstop", 5).count() == 0
     assert 100_000 in {r["doc_id"]
                        for r in s.search("hash join", 1000).collect()}
+    merge_segments(spark, root)
+    assert load_manifest(root)["config"]["stopwords"] == ["zzznewstop"]
+    assert IndexSearcher(spark, root).search("zzznewstop", 5).count() == 0
 
 
 def test_sample_matches_deterministic_and_seeded(searcher):
